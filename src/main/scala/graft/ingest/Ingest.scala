@@ -68,6 +68,14 @@ object Ingest {
       .otherwise(lit(null).cast("string"))
   }
 
+  /** F2 — the routed table name: the topic's last "/" segment. The one
+    * definition shared by [[parse]] and the streaming pipeline's scatter
+    * key, so rows are clustered by exactly the name they are routed
+    * under. Null- and ANSI-safe: `split` never yields an empty array, so
+    * `element_at(…, -1)` cannot go out of range; a NULL topic gives NULL,
+    * `""` and a trailing "/" give `""`, a slash-free topic gives itself. */
+  def tableNameOf(topic: Column): Column = element_at(split(topic, "/"), -1)
+
   /** F2+F3+F4 — full parse: adds tableName/client/device from the topic and
     * value_type/value_d/value_s from the payload, plus a `valid` flag.
     * Input columns: `topic`, `payload`. */
@@ -77,7 +85,7 @@ object Ingest {
     // out-of-range index THROWS; malformed short topics must flow to the
     // rejected output instead of killing the query (the reference's
     // poison-halt is exactly the bug we're not replicating).
-    df.withColumn("tableName", element_at(parts, -1))
+    df.withColumn("tableName", tableNameOf(col("topic")))
       .withColumn("client", get(parts, lit(1)))
       .withColumn("device", get(parts, lit(2)))
       .withColumn("value_type", valueType(col("payload")))

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.registry.ColumnDef
+import graft.sinks.WarehouseCatalog.{StagingPrefix, rm}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -70,6 +71,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   require(checkpointInterval >= 2, "checkpointInterval must be >= 2")
   private val rootDir = new File(root)
   private val manifestDir = new File(rootDir, "_manifest")
+  // staging dir prefix of a table rewrite (routed appends: StagingPrefix)
+  private val RewritePrefix = ".rewrite-"
   rootDir.mkdirs()
 
   // ------------------------------------------------------------ log I/O
@@ -903,25 +906,10 @@ final class ManifestCatalog(spark: SparkSession, root: String,
       commitVersion(batchId, added, schemas = schemas)
   }
 
+  /** Parts moved into the table dirs stay invisible until the manifest
+    * commit; a failure leaves only orphans [[vacuum]] reclaims. */
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val staging = new File(rootDir, s".staging-${java.util.UUID.randomUUID()}")
-    df.write.partitionBy("tableName")
-      .mode(SaveMode.Overwrite).parquet(staging.toString)
-    val added = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("tableName=")).map { pdir =>
-        val table = WarehouseCatalog.unescapePartitionName(
-          pdir.getName.stripPrefix("tableName="))
-        val dest = new File(rootDir, table)
-        dest.mkdirs()
-        val moved = pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map { f =>
-            if (!f.renameTo(new File(dest, f.getName)))
-              throw new java.io.IOException(s"move failed: $f")
-            f.getName
-          }.toSeq
-        table -> moved
-      }.toMap
-    rm(staging)
+    val added = WarehouseCatalog.writeRouted(df, rootDir)
     if (added.nonEmpty && !recordPending(added, Map.empty))
       commitVersion(None, added)
     true
@@ -1071,18 +1059,18 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   /** Write `df` to a staging dir and move the part files into the table
     * directory (invisible until a manifest commit references them). */
   private def writeParts(table: String, df: DataFrame): Seq[String] = {
-    val staging = new File(rootDir, s".rewrite-${java.util.UUID.randomUUID()}")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val dest = new File(rootDir, table)
-    dest.mkdirs()
-    val moved = Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).map { f =>
-        if (!f.renameTo(new File(dest, f.getName)))
-          throw new java.io.IOException(s"move failed: $f")
-        f.getName
-      }.toSeq
-    rm(staging)
-    moved
+    val staging = new File(rootDir, s"$RewritePrefix${java.util.UUID.randomUUID()}")
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val dest = new File(rootDir, table)
+      dest.mkdirs()
+      Option(staging.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          if (!f.renameTo(new File(dest, f.getName)))
+            throw new java.io.IOException(s"move failed: $f")
+          f.getName
+        }.toSeq
+    } finally rm(staging)
   }
 
   /** ONLINE compaction: snapshot the table's file list, rewrite exactly
@@ -1133,7 +1121,11 @@ final class ManifestCatalog(spark: SparkSession, root: String,
     * Pass 0 only when provably no writer is in flight (tests, single-
     * process teardown). The window must also exceed the longest
     * reader's snapshot age: compacted-away files a pinned reader still
-    * lists become eligible once older than the window. */
+    * lists become eligible once older than the window.
+    *
+    * Write staging dirs (`.staging-*`, `.rewrite-*`) a crashed process
+    * left behind are removed once NOTHING in them is younger than the
+    * window — a live writer keeps touching its own staging tree. */
   def vacuum(retentionMs: Long = ManifestCatalog.DefaultVacuumRetentionMs)
       : Int = {
     val live = snapshot()
@@ -1161,15 +1153,18 @@ final class ManifestCatalog(spark: SparkSession, root: String,
             !liveSet.contains(f.getName) && f.lastModified() <= cutoff)
           .foreach { f => if (f.delete()) removed += 1 }
       }
+    Option(rootDir.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.isDirectory && (d.getName.startsWith(StagingPrefix) ||
+        d.getName.startsWith(RewritePrefix)) && newestMtime(d) <= cutoff)
+      .foreach { d => rm(d); if (!d.exists()) removed += 1 }
     removed
   }
 
-  def fileCount(table: String): Int = snapshot().getOrElse(table, Nil).size
+  private def newestMtime(f: File): Long =
+    Option(f.listFiles()).getOrElse(Array.empty)
+      .foldLeft(f.lastModified())((m, c) => math.max(m, newestMtime(c)))
 
-  private def rm(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
-  }
+  def fileCount(table: String): Int = snapshot().getOrElse(table, Nil).size
 }
 
 object ManifestCatalog {

@@ -27,7 +27,13 @@ trait TableCatalog {
     * (tableName, client, device, value) spanning `tables` in ONE write
     * job. Returns false if this catalog can't (caller falls back to
     * per-table [[append]]). At high sensor cardinality this is the
-    * difference between 2 jobs per batch and N-tables jobs per batch. */
+    * difference between 2 jobs per batch and N-tables jobs per batch.
+    *
+    * Files written per call = distinct (tableName, input partition)
+    * pairs of `df`: a frame whose every partition holds every table
+    * writes tables × partitions small files. Callers should cluster `df`
+    * by `tableName` first (the streaming pipeline hash-partitions on it)
+    * so each table gets one part file per call. */
   def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = false
 
   /** Exactly-once support: has this streaming batch already been fully
@@ -82,36 +88,9 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
   override def append(table: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(s"$root/$table")
 
-  private def unescapePartitionName(s: String): String =
-    WarehouseCatalog.unescapePartitionName(s)
-
-  /** One dynamic-partitioned write job for ALL tables in the slice, then
-    * per-file renames from the staging dir into each table dir (parquet
-    * part-file names carry a write UUID, so moves can't collide). */
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
-    val staging = new java.io.File(rootDir,
-      s".staging-${java.util.UUID.randomUUID()}")
-    df.write.partitionBy("tableName")
-      .mode(SaveMode.Overwrite).parquet(staging.toString)
-    Option(staging.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("tableName=")).foreach { pdir =>
-        val table = unescapePartitionName(
-          pdir.getName.stripPrefix("tableName="))
-        val dest = new java.io.File(rootDir, table)
-        dest.mkdirs()
-        pdir.listFiles().filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            if (!f.renameTo(new java.io.File(dest, f.getName)))
-              throw new java.io.IOException(s"move failed: $f")
-          }
-      }
-    rm(staging)
+    WarehouseCatalog.writeRouted(df, rootDir)
     true
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete(); ()
   }
 
   // batch-commit markers: root/_batches/<id>. Marker written after all
@@ -160,7 +139,7 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
         (if (rolledBack) " (rolled back)"
          else s" AND ROLLBACK FAILED — data is in $old"))
     }
-    rm(old)
+    WarehouseCatalog.rm(old)
   }
 
   def fileCount(table: String): Int =
@@ -170,6 +149,45 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
 }
 
 object WarehouseCatalog {
+  /** Prefix of a routed write's staging dir under the catalog root. */
+  private[sinks] val StagingPrefix = ".staging-"
+
+  /** The routed write both file catalogs share: ONE dynamic-partitioned
+    * write job for all tables in `df` into a fresh staging dir under
+    * `root`, then per-file renames into each `root/<table>` dir (parquet
+    * part-file names carry a write UUID, so moves can't collide).
+    * Returns the moved file names per table. Files written = distinct
+    * (tableName, partition of `df`) pairs — see
+    * [[TableCatalog.appendRouted]]. The staging dir is removed however
+    * the call ends: a failed write job or move must not leave it behind. */
+  private[sinks] def writeRouted(df: DataFrame,
+      root: java.io.File): Map[String, Seq[String]] = {
+    val staging = new java.io.File(root,
+      s"$StagingPrefix${java.util.UUID.randomUUID()}")
+    try {
+      df.write.partitionBy("tableName")
+        .mode(SaveMode.Overwrite).parquet(staging.toString)
+      Option(staging.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.startsWith("tableName=")).map { pdir =>
+          val table = unescapePartitionName(
+            pdir.getName.stripPrefix("tableName="))
+          val dest = new java.io.File(root, table)
+          dest.mkdirs()
+          table -> pdir.listFiles().filter(_.getName.endsWith(".parquet"))
+            .map { f =>
+              if (!f.renameTo(new java.io.File(dest, f.getName)))
+                throw new java.io.IOException(s"move failed: $f")
+              f.getName
+            }.toSeq
+        }.toMap
+    } finally rm(staging)
+  }
+
+  private[sinks] def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(); ()
+  }
+
   /** Inverse of Spark's partition-path escaping: %XX sequences only.
     * NOT URLDecoder — that also maps '+' to space, silently splitting a
     * table named "a+b" into a phantom directory "a b". */

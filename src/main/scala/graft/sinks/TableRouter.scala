@@ -145,7 +145,11 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
       // per value type (validated tasks always have vt == table type, so
       // there are at most 2 groups), covering every table in the slice.
       // Catalogs without a routed write (JDBC) fall back to bounded-
-      // parallel per-table jobs.
+      // parallel per-table jobs. The routed write emits one part file
+      // per distinct (table, partition of `batch`), so the caller
+      // should hand over a batch clustered by tableName (IngestPipeline
+      // hash-partitions on it); an unclustered batch writes
+      // tables × partitions small files per value type.
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       val byType = appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq

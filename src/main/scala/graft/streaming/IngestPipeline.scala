@@ -88,14 +88,20 @@ object IngestPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The MQTT source is one ordered feed → one input partition;
-        // scatter before the parse so the chain runs on all cores
-        // (order is irrelevant once rows are routed by tableName).
+        // The source gives one input partition per connector shard, and
+        // each shard's rows span many tables. Scatter before the parse so
+        // the chain runs on all cores, hash-keyed on the routed table name
+        // (order is irrelevant once rows are routed by tableName): a
+        // table's rows then share ONE partition through the parse, the
+        // persisted records and the routed write, which therefore emits
+        // one part file per table per batch, not one per (table, core).
+        // NULL/empty keys hash like any other row and reach rejected.
         // Parse ONCE and persist — records, rejected, and the strict
         // check all derive from the parsed frame without re-running the
         // regex/JSON chain per consumer.
         val parsed = Ingest.parse(batch.select("topic", "payload")
-            .repartition(batch.sparkSession.sparkContext.defaultParallelism))
+            .repartition(batch.sparkSession.sparkContext.defaultParallelism,
+              Ingest.tableNameOf(col("topic"))))
           .persist()
         try {
           val rej = Ingest.rejectedOfParsed(parsed)

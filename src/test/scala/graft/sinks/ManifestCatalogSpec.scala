@@ -3,6 +3,7 @@ package graft.sinks
 import java.nio.file.Files
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class ManifestCatalogSpec extends AnyFunSuite {
@@ -102,6 +103,45 @@ class ManifestCatalogSpec extends AnyFunSuite {
     assert(cat.batchCommitted(5L) && cat.read("t").count() == 1)
     assert(cat.vacuum(retentionMs = 0L) >= 1) // first attempt's orphans reclaimed
     assert(cat.read("t").count() == 1)
+  }
+
+  test("a failed write leaves no staging dir; vacuum reclaims stale ones") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val root = Files.createTempDirectory("manifest").toString
+    val cat = new ManifestCatalog(spark, root)
+    def stagingDirs(dir: String) = new java.io.File(dir).list().toSeq
+      .filter(n => n.startsWith(".staging-") || n.startsWith(".rewrite-"))
+    // one poisoned row fails the write job; coalesce(1) keeps it a single
+    // task so no sibling task is still writing when the call returns
+    val poisoned = Seq(("t1", "c1", 1.0), ("t2", "boom", 2.0))
+      .toDF("tableName", "client", "value")
+      .withColumn("client", when(col("client") === "boom",
+        raise_error(lit("poisoned row"))).otherwise(col("client")))
+      .coalesce(1)
+    // a failed move: a plain file squats on the table directory's name
+    val squatted = Seq(("t9", "c1", 1.0)).toDF("tableName", "client", "value")
+    def failBoth(dir: String)(routed: (DataFrame, Seq[String]) => Boolean) = {
+      assert(new java.io.File(dir, "t9").createNewFile())
+      intercept[Exception](routed(poisoned, Seq("t1", "t2")))
+      intercept[java.io.IOException](routed(squatted, Seq("t9")))
+      assert(stagingDirs(dir).isEmpty)
+    }
+    failBoth(root)(cat.appendRouted)
+    intercept[Exception](cat.append("t3", poisoned.drop("tableName")))
+    intercept[java.io.IOException](cat.append("t9", squatted))
+    assert(stagingDirs(root).isEmpty)
+    assert(cat.listTables().isEmpty)
+    val wh = Files.createTempDirectory("warehouse").toString
+    failBoth(wh)(new WarehouseCatalog(spark, wh).appendRouted)
+    // a crashed process's leftovers: dot-prefixed, yet not skipped
+    val staleParts = new java.io.File(root, ".staging-stale/tableName=t1")
+    assert(staleParts.mkdirs())
+    assert(new java.io.File(staleParts, "part-0.parquet").createNewFile())
+    assert(new java.io.File(root, ".rewrite-stale").mkdirs())
+    assert(cat.vacuum(retentionMs = 60L * 60 * 1000) == 0) // young: kept
+    assert(stagingDirs(root).size == 2)
+    assert(cat.vacuum(retentionMs = 0L) == 2)
+    assert(stagingDirs(root).isEmpty)
   }
 
   test("describe maps schema through the ClickHouse bijection") {

@@ -194,6 +194,74 @@ class IngestPipelineSpec extends AnyFunSuite {
     } finally if (q.isActive) q.stop()
   }
 
+  test("each micro-batch commits one part file per table") {
+    // the scatter is keyed on the table name, so the routed write opens
+    // one parquet writer per table — not one per (table, core)
+    val cid = s"files-${System.nanoTime()}"
+    InMemoryBroker.reset(cid)
+    val wh = Files.createTempDirectory("wh").toString
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    val catalog = TableCatalog.default(spark, wh)
+    val tables = (0 until 10).map(i => s"s$i")
+    val perTable = 3 * spark.sparkContext.defaultParallelism
+    // published while no query runs (mqttStream subscribes eagerly), so
+    // the next query's first micro-batch takes the whole round
+    def batchOfRound(): Unit = {
+      val source = IngestPipeline.mqttStream(spark, cid, Seq("#"))
+      (0 until perTable).foreach { k =>
+        tables.foreach(t => InMemoryBroker.publish(
+          s"/c$k/d$k/out/sensors/$t", s"""{"value":$k.5}"""))
+      }
+      val q = IngestPipeline.start(source,
+        new TableRouter(new SchemaRegistry, catalog), ckpt)
+      try {
+        q.processAllAvailable()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      } finally q.stop()
+    }
+    batchOfRound()
+    assert(tables.map(catalog.fileCount) == tables.map(_ => 1))
+    batchOfRound()
+    assert(tables.map(catalog.fileCount) == tables.map(_ => 2))
+    assert(tables.forall(t => catalog.read(t).count() == 2L * perTable))
+  }
+
+  test("degenerate topics reach the rejected output; query survives ANSI") {
+    // NULL, "", slash-free and trailing-"/" topics give the scatter key
+    // NULL, "", the topic itself and "" — each must hash like any other
+    // row, not throw
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    implicit val sc = spark.sqlContext
+    val src = MemoryStream[(String, String)]
+    val wh = Files.createTempDirectory("wh").toString
+    val rej = Files.createTempDirectory("rej").toString
+    val catalog = TableCatalog.default(spark, wh)
+    val q = IngestPipeline.start(src.toDF().toDF("topic", "payload"),
+      new TableRouter(new SchemaRegistry, catalog),
+      Files.createTempDirectory("ckpt").toString, rejectedDir = Some(rej))
+    val v = """{"value":1.5}"""
+    try {
+      // "/c/d/out/sensors/" is F1-valid (≥ 4 slashes, as in the
+      // reference); its empty table name is refused by the router's
+      // name policy and must not become a table
+      src.addData((null, v), ("", v), ("no-slash", v), ("/c/d/", v),
+        ("/c/d/out/sensors/", v), ("/c/d/out/sensors/ok", v))
+      q.processAllAvailable()
+      src.addData(("/c/d/out/sensors/ok", v))
+      q.processAllAvailable()
+      assert(q.isActive)
+      val rows = spark.read.parquet(rej).collect()
+        .map(r => (Option(r.getAs[String]("topic")), r.getAs[String]("reason")))
+        .sortBy(_._1)
+      assert(rows.toSeq == Seq(None, Some(""), Some("/c/d/"), Some("no-slash"))
+        .map(_ -> "invalid_topic"))
+      assert(catalog.listTables() == Seq("ok"))
+      assert(catalog.read("ok").count() == 2)
+    } finally q.stop()
+  }
+
   test("QoS-1 redelivery collapsed by watermark dedup") {
     val cid = s"dedup-${System.nanoTime()}"
     InMemoryBroker.reset(cid)
