@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,20 +24,7 @@ object Verify {
       if (java.nio.file.Files.readString(p).trim.toLong < 2097152L)
         java.nio.file.Files.writeString(p, "2097152")
     } catch { case _: Throwable => () }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 202 distinct query plans blow through the default 100-entry
-      // generated-class cache (see Bench for the measured effect)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

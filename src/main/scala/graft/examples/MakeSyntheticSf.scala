@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up fixture writer — the full-suite dress rehearsal
@@ -24,14 +23,7 @@ object MakeSyntheticSf {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf_synth10"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     def rep(name: String, shifts: Map[String, Long]): Unit = {
       val df = spark.read.parquet(s"$src/$name.parquet")

@@ -5,7 +5,6 @@ import graft.sinks.{TableCatalog, TableRouter}
 import graft.sources.mqtt.{InMemoryBroker, MqttSource}
 import graft.streaming.IngestPipeline
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the reference pipeline on Spark:
   * broker → mqtt source → parse/validate → route → warehouse, including a
@@ -15,12 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object MqttDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
 
     val wh = Files.createTempDirectory("demo-wh").toString
     val rej = Files.createTempDirectory("demo-rej").toString

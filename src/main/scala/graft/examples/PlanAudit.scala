@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for representative queries, plus
   * automated checks of the plan properties that matter at 100 TB:
@@ -24,15 +23,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
 
     // extension-path sanity: the native functions must resolve from pure
     // SQL with no manual registry call

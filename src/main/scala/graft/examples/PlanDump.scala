@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for declared queries to files — the
@@ -27,19 +26,7 @@ object PlanDump {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // Bench-condition scan sources: the bench warms the split-layout
     // copies before any query, so the committed plan evidence must

@@ -5,7 +5,6 @@ import graft.sinks.{TableCatalog, TableRouter}
 import graft.sources.mqtt.InMemoryBroker
 import graft.streaming.IngestPipeline
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Ingest-path throughput: N pre-published MQTT messages through
   * source → parse → route → warehouse, one JSON line out.
@@ -21,27 +20,21 @@ import org.apache.spark.sql.SparkSession
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("STREAM_BENCH_N", "200000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Streaming shuffle partitions are sized to the PER-BATCH volume
-    // (the 4-shard source yields ~KB-scale micro-batches), not the box
-    // core count: AQE coalescing does not apply inside a streaming
-    // query, so a 32-way shuffle on a tiny batch pays 8x the per-task
-    // floor for no parallelism the 4 source partitions can feed.
-    // Measured at local[32], same window: 32 partitions 12.0k msgs/s,
-    // 4 partitions 18.0k. A production stream sizes this from expected
-    // rows-per-batch (Tuning.partsFor), exactly like the batch path.
-    val streamParts = sys.env.getOrElse("STREAM_BENCH_PARTITIONS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", streamParts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val cid = "streambench"
     // sharded source: each filter owns one connector session → one input
     // partition each, so the parse stage starts 4-wide at the scan
     val shards = 4
+    // Streaming shuffle partitions are sized to the PER-BATCH volume
+    // (one per source shard; the shards yield ~KB-scale micro-batches),
+    // not the box core count: AQE coalescing does not apply inside a
+    // streaming query, so a 32-way shuffle on a tiny batch pays 8x the
+    // per-task floor for no parallelism the 4 source partitions can
+    // feed. Measured at local[32], same window: 32 partitions 12.0k
+    // msgs/s, 4 partitions 18.0k. A production stream sizes this from
+    // expected rows-per-batch (Tuning.partsFor), exactly like the batch
+    // path.
+    val spark = graft.GraftSession(graft.GraftSession.cpus, shards)
+
+    val cid = "streambench"
     val filters = Seq("/c0/#", "/c1/#", "/c2/#", "c/#")
     graft.sources.mqtt.MqttSource.shardIds(cid, shards)
       .foreach(InMemoryBroker.reset)

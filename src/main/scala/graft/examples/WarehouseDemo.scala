@@ -3,7 +3,6 @@ package graft.examples
 import java.nio.file.Files
 
 import graft.sinks.ManifestCatalog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Runnable tour of the ManifestCatalog table format — every warehouse
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object WarehouseDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession(4)
     import spark.implicits._
 
     val root = Files.createTempDirectory("wh-demo").toString

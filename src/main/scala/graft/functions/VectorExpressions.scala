@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -316,34 +316,48 @@ object KmNearest {
   }
 }
 
-/** Session-level registration so the expressions are usable from
-  * `expr("cosine_sim(a, b)")` / SQL. Idempotent. */
+/** The engine's native SQL functions — ONE table that both the
+  * session extension ([[graft.plans.GraftExtensions]]) and the
+  * per-session [[register]] read, so the two can never disagree on the
+  * set, an arity or a usage line. */
 object VectorFunctions {
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != n) throw new IllegalArgumentException(
-        s"$name expects $n argument(s), got ${exprs.length}")
+  /** One SQL function: `build` receives exactly `arity` arguments. */
+  final case class Fn(name: String, arity: Int, usage: String,
+      build: Seq[Expression] => Expression) {
+    /** The builder Spark calls: a wrong-arity call raises a declared
+      * IllegalArgumentException, never an index error. */
+    def builder: Seq[Expression] => Expression = exprs => {
+      if (exprs.length != arity) throw new IllegalArgumentException(
+        s"$name expects $arity argument(s), got ${exprs.length}")
       build(exprs)
     }
+    def info: ExpressionInfo =
+      new ExpressionInfo("graft.functions." + name, null, name, usage, "")
+  }
 
+  val all: Seq[Fn] = Seq(
+    Fn("cosine_sim", 2, "cosine_sim(a, b) - cosine similarity of two float vectors",
+      e => CosineSim(e(0), e(1))),
+    Fn("dot_product", 2, "dot_product(a, b) - dot product of two float vectors",
+      e => DotProduct(e(0), e(1))),
+    Fn("minhash_sig", 1, "minhash_sig(tokens) - 16-hash MinHash signature over 3-token shingles",
+      e => MinHashSig(e.head)),
+    Fn("simhash_sig", 1, "simhash_sig(tokens) - 16-bit SimHash over distinct tokens",
+      e => SimHash(e.head)),
+    Fn("simhash_wide", 1, "simhash_wide(tokens) - 60-bit SimHash over distinct 3-token shingles",
+      e => SimHashWide(e.head)),
+    Fn("vec_norm", 1, "vec_norm(a) - L2 norm of a float vector",
+      e => VecNorm(e.head)),
+    Fn("km_nearest", 2, "km_nearest(cs, qv) - nearest centroid struct(dist, cell) of a quantized vector",
+      e => KmNearest(e(0), e(1))),
+    Fn("z_value", 2, "z_value(a, b) - 21+21-bit Morton (z-order) interleave of two non-negative longs",
+      e => ZValue(e(0), e(1))))
+
+  /** Session-level registration so the expressions are usable from
+    * `expr("cosine_sim(a, b)")` / SQL in a session built without the
+    * extension. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      arity("cosine_sim", 2)(e => CosineSim(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      arity("dot_product", 2)(e => DotProduct(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      arity("minhash_sig", 1)(e => MinHashSig(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_sig",
-      arity("simhash_sig", 1)(e => SimHash(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_wide",
-      arity("simhash_wide", 1)(e => SimHashWide(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm",
-      arity("vec_norm", 1)(e => VecNorm(e.head)), "built-in")
-    reg.createOrReplaceTempFunction("km_nearest",
-      arity("km_nearest", 2)(e => KmNearest(e(0), e(1))), "built-in")
-    reg.createOrReplaceTempFunction("z_value",
-      arity("z_value", 2)(e => ZValue(e(0), e(1))), "built-in")
+    all.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
   }
 }

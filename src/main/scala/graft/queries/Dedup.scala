@@ -1173,9 +1173,9 @@ object Dedup {
     * distributed CC fixpoint is pure job floor; above it the
     * distributed path runs. The count comes from the aggregate the
     * query computes anyway, so the gate adds zero jobs. A system
-    * property (test seam, graft.superstep.* precedent) lets
-    * ThresholdCurveSpec force the distributed arm on fixture-sized
-    * edge sets and pin both paths byte-identical. */
+    * property (a test seam, not a tuning knob) lets ThresholdCurveSpec
+    * force the distributed arm on fixture-sized edge sets and pin both
+    * paths byte-identical. */
   private def DriverCcPairCap: Long =
     java.lang.Long.parseLong(
       System.getProperty("graft.q170.driverCcCap", "1000000"))

@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all specs (Spark session startup is ~5s;
-  * per-suite sessions would dominate test time). */
+  * per-suite sessions would dominate test time), under the same
+  * [[GraftSession]] profile every main runs, at local[4]. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4)
 }

@@ -127,4 +127,42 @@ class ExpressionsSpec extends AnyFunSuite {
     val shared = sigs(0).zip(sigs(2)).count { case (a, b) => a == b }
     assert(shared >= 8, s"only $shared/16 minhashes shared")
   }
+
+  // one valid argument list per table entry, in plain SQL
+  private val floats = "array(cast(1.0 as float), cast(2.0 as float))"
+  private val tokens = "array('a', 'b', 'c')"
+  private val sampleArgs: Map[String, Seq[String]] = Map(
+    "cosine_sim" -> Seq(floats, floats),
+    "dot_product" -> Seq(floats, floats),
+    "minhash_sig" -> Seq(tokens),
+    "simhash_sig" -> Seq(tokens),
+    "simhash_wide" -> Seq(tokens),
+    "vec_norm" -> Seq(floats),
+    "km_nearest" -> Seq("array(named_struct('cell', 0, 'c', array(1.0D)))", "array(2L)"),
+    "z_value" -> Seq("3L", "5L"))
+
+  test("every native function resolves from plain SQL; a wrong arity is a declared error") {
+    assert(sampleArgs.keySet == VectorFunctions.all.map(_.name).toSet,
+      "every table entry needs a sample call here")
+    // a fresh session: the profile's extension only, no temp registration
+    val session = spark.newSession()
+    def call(name: String, args: Seq[String]) =
+      session.sql(s"SELECT $name(${args.mkString(", ")})").head()
+    VectorFunctions.all.foreach { f =>
+      val args = sampleArgs(f.name)
+      assert(args.size == f.arity, s"${f.name} sample arity")
+      assert(!call(f.name, args).isNullAt(0),
+        s"${f.name} must compute through the extension")
+      Seq(args.init, args :+ args.head).foreach { bad =>
+        val e = intercept[Exception](call(f.name, bad))
+        val chain = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).toSeq
+        assert(!chain.exists(_.isInstanceOf[IndexOutOfBoundsException]),
+          s"${f.name} with ${bad.size} args raised an index error: $e")
+        assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains(s"${f.name} expects ${f.arity} argument(s)")),
+          s"${f.name} with ${bad.size} args must raise the declared error, got $e")
+      }
+    }
+  }
 }

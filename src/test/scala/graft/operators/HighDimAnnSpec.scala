@@ -6,14 +6,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ANN stack at PRODUCTION embedding width (768 — the fixture is
-  * 64-dim and q44's PQ subspaces 16-wide): the ScaleStress hd* probes
-  * measure wall time at this width; this spec pins the semantics the
-  * probes assume — kernels stay correct and deterministic at 768 dims
-  * (the codegen'd cosine, the bit-reproducible IVF trainer, PQ encode +
-  * ADC search at m=8 × 96-wide subspaces). Vectors are the probes'
-  * synthetic hash floats, so any width-dependent breakage (method-size
-  * cliff, slice arithmetic off the end of the array) shows here at
-  * test scale before a 23-minute ScaleStress run finds it. */
+  * 64-dim and q44's PQ subspaces 16-wide): ScaleStress's 768-dim scale
+  * legs (hdbrute/hdivf/hdpq) measure wall time at this width; this spec
+  * pins the semantics those legs assume — kernels stay correct and
+  * deterministic at 768 dims (the codegen'd cosine, the bit-reproducible
+  * IVF trainer, PQ encode + ADC search at m=8 × 96-wide subspaces).
+  * Vectors are the same synthetic hash floats, so any width-dependent
+  * breakage (method-size cliff, slice arithmetic off the end of the
+  * array) shows here at test scale before a 23-minute ScaleStress run
+  * finds it. */
 class HighDimAnnSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
