@@ -1061,7 +1061,8 @@ final class ManifestCatalog(spark: SparkSession, root: String,
   private def writeParts(table: String, df: DataFrame): Seq[String] = {
     val staging = new File(rootDir, s"$RewritePrefix${java.util.UUID.randomUUID()}")
     try {
-      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      df.write.options(ForkFreeLocalFileSystem.WriteOptions)
+        .mode(SaveMode.Overwrite).parquet(staging.toString)
       val dest = new File(rootDir, table)
       dest.mkdirs()
       Option(staging.listFiles()).getOrElse(Array.empty)

@@ -86,7 +86,8 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
   }
 
   override def append(table: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$root/$table")
+    df.write.options(ForkFreeLocalFileSystem.WriteOptions)
+      .mode(SaveMode.Append).parquet(s"$root/$table")
 
   override def appendRouted(df: DataFrame, tables: Seq[String]): Boolean = {
     WarehouseCatalog.writeRouted(df, rootDir)
@@ -130,7 +131,8 @@ final class WarehouseCatalog(spark: SparkSession, root: String)
     val old = new java.io.File(s"$root/.old-$table")
     spark.read.parquet(dir.toString)
       .coalesce(math.max(1, targetFiles))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      .write.options(ForkFreeLocalFileSystem.WriteOptions)
+      .mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (!dir.renameTo(old))
       throw new java.io.IOException(s"compact: cannot move $dir aside")
     if (!tmp.renameTo(dir)) {
@@ -165,7 +167,8 @@ object WarehouseCatalog {
     val staging = new java.io.File(root,
       s"$StagingPrefix${java.util.UUID.randomUUID()}")
     try {
-      df.write.partitionBy("tableName")
+      df.write.options(ForkFreeLocalFileSystem.WriteOptions)
+        .partitionBy("tableName")
         .mode(SaveMode.Overwrite).parquet(staging.toString)
       Option(staging.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("tableName=")).map { pdir =>

@@ -1,8 +1,11 @@
 package graft.sinks
 
 import graft.registry.{ColumnDef, SchemaRegistry}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success}
 
 /** Per-batch routing outcome (observability; the reference logs and dies
   * instead — /root/reference/main.go:21-31). `alreadyCommitted` = this
@@ -25,16 +28,17 @@ final case class RouteStats(
   *     registry insert;
   *   - then W5 bulk append of the typed per-table slice.
   *
-  * The only driver-side collect is the per-batch `(tableName, value_type)`
+  * The only driver-side input is the per-batch `(tableName, value_type)`
   * histogram — cardinality = number of distinct sensors, thousands at most,
-  * never data-sized. Row data itself moves executor-side only.
+  * never data-sized. The streaming pipeline computes it in its one
+  * per-batch counting job and passes it in; a caller that passes none
+  * gets it from a collect here. Row data itself moves executor-side only.
   *
   * Routed table schema is the reference's golden shape
   * `[client String, device String, value <inferred>]`
   * (/root/reference/message/message_test.go:177-198).
   */
 final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
-    appendParallelism: Int = 4,
     schemaRejectSink: Option[DataFrame => Unit] = None) {
 
   /** W1 — seed the registry from the physical catalog at startup
@@ -56,15 +60,6 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     * Lets the pipeline order its side outputs around the commit point. */
   def isCommitted(batchId: Long): Boolean =
     batchId >= 0 && catalog.batchCommitted(batchId)
-
-  // shared bounded pool for append jobs — routeBatch runs per micro-batch
-  // and must not churn a fresh thread pool on the hot path
-  private lazy val appendPool =
-    java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, appendParallelism),
-      (r: Runnable) => {
-        val t = new Thread(r, "router-append"); t.setDaemon(true); t
-      })
 
   private def colsFor(chType: String): Seq[ColumnDef] = Seq(
     ColumnDef("client", "String"),
@@ -89,22 +84,28 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
     *
     * With `batchId >= 0` (streaming), replayed batches the catalog has
     * already committed are skipped — effectively-once appends across
-    * query restarts for catalogs that record commits. */
-  def routeBatch(batch: DataFrame, batchId: Long = -1L): RouteStats = {
+    * query restarts for catalogs that record commits.
+    *
+    * `histogram` is the batch's `(tableName, value_type, rows)` counts
+    * when the caller already has them — the streaming pipeline gets them
+    * from its one counting job over the persisted parse, and `batch` is
+    * then read straight off that cache. Without it the router persists
+    * `batch` and counts it itself. */
+  def routeBatch(batch: DataFrame, batchId: Long = -1L,
+      histogram: Option[Seq[(String, String, Long)]] = None): RouteStats = {
     if (batchId >= 0 && catalog.batchCommitted(batchId))
       return RouteStats(Map.empty, Map.empty, alreadyCommitted = true)
     // transactional catalogs defer append visibility until the single
     // commitBatch below — rows + batch id become visible atomically
     if (batchId >= 0) catalog.beginBatch(batchId)
-    val recs = batch.persist()
+    val recs = if (histogram.isEmpty) batch.persist() else batch
     try {
       // (tableName, value_type) -> count; tiny, driver-side by design.
-      val hist = recs.groupBy("tableName", "value_type").count()
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val hist = histogram.getOrElse(
+          recs.groupBy("tableName", "value_type").count().collect().toSeq
+            .map(r => (r.getString(0), r.getString(1), r.getLong(2))))
         .sortBy(t => (t._1, t._2))
 
-      val appended = scala.collection.mutable.Map.empty[String, Long]
       val rejected = scala.collection.mutable.Map.empty[String, Long]
       val badNames = scala.collection.mutable.Map.empty[String, Long]
       val appendTasks = scala.collection.mutable.ArrayBuffer
@@ -143,45 +144,33 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
 
       // Phase 2: appends. Fast path — ONE dynamic-partitioned write job
       // per value type (validated tasks always have vt == table type, so
-      // there are at most 2 groups), covering every table in the slice.
-      // Catalogs without a routed write (JDBC) fall back to bounded-
-      // parallel per-table jobs. The routed write emits one part file
-      // per distinct (table, partition of `batch`), so the caller
-      // should hand over a batch clustered by tableName (IngestPipeline
+      // there are at most 2 groups), covering every table in the slice;
+      // the two run side by side on the shared append pool, under the
+      // caller's Spark local properties (job group, streaming query and
+      // batch ids). Catalogs without a routed write (JDBC) fall back to
+      // per-table jobs. The routed write emits one part file per
+      // distinct (table, partition of `batch`), so the caller should
+      // hand over a batch clustered by tableName (IngestPipeline
       // hash-partitions on it); an unclustered batch writes
       // tables × partitions small files per value type.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val byType = appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq
-        .sortBy(_._1)
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(appendPool)
-      locally {
-        val futures = byType.map { case ((vt, valueCol), tasks) =>
-          Future {
-            val tables = tasks.map(_._1)
-            val routedDf = recs
-              .filter(col("value_type") === vt &&
-                col("tableName").isInCollection(tables))
-              .select(col("tableName"), col("client"), col("device"),
-                col(valueCol).as("value"))
-            val handled = catalog.appendRouted(routedDf, tables)
-            if (!handled) tasks.foreach { case (table, _, _, _) =>
-              catalog.append(table,
-                recs.filter(col("tableName") === table &&
-                    col("value_type") === vt)
-                  .select(col("client"), col("device"),
-                    col(valueCol).as("value")))
-            }
-            appended.synchronized {
-              tasks.foreach { case (table, _, _, n) =>
-                appended(table) = appended.getOrElse(table, 0L) + n
-              }
-            }
+      val session = recs.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val running = appendTasks.toSeq.groupBy(t => (t._2, t._3)).toSeq
+        .sortBy(_._1).map { case ((vt, valueCol), tasks) =>
+          SQLExecution.withThreadLocalCaptured(session,
+              TableRouter.appendPool) {
+            appendType(recs, vt, valueCol, tasks.map(_._1))
+            tasks
           }
         }
-        Await.result(Future.sequence(futures), Duration.Inf)
+      // wait for every append before rethrowing the first failure: none
+      // may still be writing once the batch is abandoned
+      val outcomes = running.map { f =>
+        try Success(f.get())
+        catch { case e: ExecutionException => Failure(e.getCause) }
       }
+      val appended = outcomes.flatMap(_.get)
+        .groupMapReduce(_._1)(_._4)(_ + _)
 
       // schema-mismatched and name-invalid slices go to the configured
       // side output — "rejected" must mean visible, not counted away
@@ -200,8 +189,33 @@ final class TableRouter(registry: SchemaRegistry, catalog: TableCatalog,
         }
 
       if (batchId >= 0) catalog.commitBatch(batchId)
-      RouteStats(appended.synchronized(appended.toMap), rejected.toMap,
-        badNames.toMap)
-    } finally { recs.unpersist(); () }
+      RouteStats(appended, rejected.toMap, badNames.toMap)
+    } finally { if (histogram.isEmpty) recs.unpersist(); () }
   }
+
+  /** One value type's slice of `recs` into its `tables`: one routed
+    * write, or per-table appends where the catalog has none. */
+  private def appendType(recs: DataFrame, vt: String, valueCol: String,
+      tables: Seq[String]): Unit = {
+    val routedDf = recs
+      .filter(col("value_type") === vt &&
+        col("tableName").isInCollection(tables))
+      .select(col("tableName"), col("client"), col("device"),
+        col(valueCol).as("value"))
+    if (!catalog.appendRouted(routedDf, tables)) tables.foreach { table =>
+      catalog.append(table,
+        recs.filter(col("tableName") === table && col("value_type") === vt)
+          .select(col("client"), col("device"), col(valueCol).as("value")))
+    }
+  }
+}
+
+object TableRouter {
+  /** One pool for every router's appends (at most two per batch, one per
+    * value type). Daemon threads, made on demand and retired after 60 s
+    * idle, so stopped pipelines leave none behind. */
+  private val appendPool: ExecutorService =
+    Executors.newCachedThreadPool((r: Runnable) => {
+      val t = new Thread(r, "router-append"); t.setDaemon(true); t
+    })
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ingest.Ingest
-import graft.sinks.TableRouter
+import graft.sinks.{ForkFreeLocalFileSystem, TableRouter}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -96,22 +96,32 @@ object IngestPipeline {
         // persisted records and the routed write, which therefore emits
         // one part file per table per batch, not one per (table, core).
         // NULL/empty keys hash like any other row and reach rejected.
-        // Parse ONCE and persist — records, rejected, and the strict
-        // check all derive from the parsed frame without re-running the
-        // regex/JSON chain per consumer.
+        // Parse ONCE and persist — the counts, records, rejected, and the
+        // strict check all derive from the parsed frame without re-running
+        // the regex/JSON chain per consumer.
         val parsed = Ingest.parse(batch.select("topic", "payload")
             .repartition(batch.sparkSession.sparkContext.defaultParallelism,
               Ingest.tableNameOf(col("topic"))))
           .persist()
         try {
+          // ONE counting action per batch, which also fills the cache:
+          // rows per (valid, tableName, value_type). The keys include the
+          // scatter key, so it adds no exchange. Its invalid groups give
+          // the reject count, its valid ones the router's histogram, so
+          // neither costs a job of its own.
+          val counts = parsed.groupBy("valid", "tableName", "value_type")
+            .count().collect()
+          val rejectedRows =
+            counts.filterNot(_.getBoolean(0)).map(_.getLong(3)).sum
+          val histogram = counts.toSeq.filter(_.getBoolean(0))
+            .map(r => (r.getString(1), r.getString(2), r.getLong(3)))
           val rej = Ingest.rejectedOfParsed(parsed)
-          if (strictPoisonStop) {
+          if (strictPoisonStop && rejectedRows > 0) {
             // strict-compat: reference halts on the first bad message
-            val bad = rej.limit(1).collect()
-            if (bad.nonEmpty)
-              throw new PoisonMessageException(
-                s"poison message on topic '${bad.head.getAs[String]("topic")}'" +
-                  s": ${bad.head.getAs[String]("reason")}")
+            val bad = rej.limit(1).collect().head
+            throw new PoisonMessageException(
+              s"poison message on topic '${bad.getAs[String]("topic")}'" +
+                s": ${bad.getAs[String]("reason")}")
           }
           // Side output BEFORE the data commit: if it ran after, a crash
           // between commitBatch and the rejected write would lose those
@@ -119,11 +129,15 @@ object IngestPipeline {
           // gives the audit trail at-least-once (duplicates possible on
           // replay of an uncommitted batch) and the data path
           // effectively-once — the right asymmetry for an audit log.
-          if (!router.isCommitted(batchId)) rejectedDir.foreach { dir =>
-            if (!rej.isEmpty)
-              rej.write.mode("append").parquet(dir)
-          }
-          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId)
+          // Fork-free file-system options as for every sinks write (see
+          // ForkFreeLocalFileSystem).
+          if (rejectedRows > 0 && !router.isCommitted(batchId))
+            rejectedDir.foreach { dir =>
+              rej.write.options(ForkFreeLocalFileSystem.WriteOptions)
+                .mode("append").parquet(dir)
+            }
+          router.routeBatch(Ingest.recordsOfParsed(parsed), batchId,
+            Some(histogram))
           // standing cluster fold AFTER the data commit: a crash in
           // between replays the batch — the router skips (isCommitted)
           // and the fold runs (its own lastBatch guard), so neither

@@ -93,6 +93,22 @@ class TableRouterSpec extends AnyFunSuite {
     }
   }
 
+  test("a caller-supplied histogram routes like the router's own count") {
+    val rows = Seq(
+      ("/c/d/out/sensors/a", """{"value":1.0}"""),
+      ("/c/d/out/sensors/a", """{"value":2.0}"""),
+      ("/c/d/out/sensors/b", """{"value":"x"}"""),
+      ("/c/d/out/sensors/..", """{"value":3.0}"""))
+    val (own, _, _) = freshRouter()
+    val (given, _, catalog) = freshRouter()
+    val hist = Seq(("b", "String", 1L), ("..", "Float64", 1L),
+      ("a", "Float64", 2L))
+    val stats = given.routeBatch(batchOf(rows: _*), histogram = Some(hist))
+    assert(stats == own.routeBatch(batchOf(rows: _*)))
+    assert(stats.appended == Map("a" -> 2L, "b" -> 1L))
+    assert(catalog.read("a").count() == 2 && catalog.read("b").count() == 1)
+  }
+
   test("schema-mismatch rows reach the configured reject sink") {
     val root = Files.createTempDirectory("graft-wh").toString
     val catalog = new WarehouseCatalog(spark, root)

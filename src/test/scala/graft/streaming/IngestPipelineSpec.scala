@@ -7,6 +7,7 @@ import graft.sources.mqtt.InMemoryBroker
 import java.nio.file.Files
 import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end: broker → MQTT source → F1–F5 parse → router → warehouse,
   * plus the poison-message and QoS-1-dedup behaviors the engine fixes
@@ -172,26 +173,112 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(catalog.read("once").count() == 1)
   }
 
-  test("strict-compat mode: poison message halts the query (reference X1)") {
-    val cid = s"strict-${System.nanoTime()}"
+  private def strictQuery(cid: String, wh: String) = {
     InMemoryBroker.reset(cid)
     InMemoryBroker.setSubscriptions(cid, Seq("#"))
-    val wh = Files.createTempDirectory("wh").toString
-    val router = new TableRouter(new SchemaRegistry,
-      TableCatalog.default(spark, wh))
-    val q = IngestPipeline.start(
+    IngestPipeline.start(
       IngestPipeline.mqttStream(spark, cid, Seq("#")),
-      router, Files.createTempDirectory("ckpt").toString,
+      new TableRouter(new SchemaRegistry, TableCatalog.default(spark, wh)),
+      Files.createTempDirectory("ckpt").toString,
       strictPoisonStop = true)
+  }
+
+  test("strict-compat mode: poison message halts the query (reference X1)") {
+    val q = strictQuery(s"strict-${System.nanoTime()}",
+      Files.createTempDirectory("wh").toString)
     try {
       InMemoryBroker.publish("/c/d/out/sensors/ok", """{"value":true}""")
       val failed = try { q.processAllAvailable(); false }
       catch { case _: Throwable => true }
       assert(failed, "query should die on poison in strict mode")
-      assert(q.exception.isDefined)
-      assert(q.exception.get.getMessage.contains("poison") ||
-        q.exception.get.cause != null)
+      val poison = Iterator.iterate[Throwable](q.exception.get)(_.getCause)
+        .takeWhile(_ != null)
+        .collectFirst { case p: IngestPipeline.PoisonMessageException => p }
+      assert(poison.isDefined, s"not a poison halt: ${q.exception.get}")
+      assert(poison.get.getMessage.contains("'/c/d/out/sensors/ok'"))
+      assert(poison.get.getMessage.contains("unsupported_value_type"))
     } finally if (q.isActive) q.stop()
+  }
+
+  test("strict-compat mode: a clean batch commits normally") {
+    val wh = Files.createTempDirectory("wh").toString
+    val q = strictQuery(s"strict-ok-${System.nanoTime()}", wh)
+    try {
+      InMemoryBroker.publish("/c/d/out/sensors/ok", """{"value":1.5}""")
+      InMemoryBroker.publish("/c/d/out/sensors/ok", """{"value":2.5}""")
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty)
+      val vals = TableCatalog.default(spark, wh).read("ok").collect()
+        .map(_.getAs[Double]("value")).sorted.toSeq
+      assert(vals == Seq(1.5, 2.5))
+    } finally if (q.isActive) q.stop()
+  }
+
+  test("a steady micro-batch runs six Spark jobs") {
+    // the per-batch fixed cost is counted in jobs. The one counting
+    // action (reject count + router histogram) runs as three, since AQE
+    // submits each query stage as its own job: the scatter's shuffle, the
+    // parse cache fill and the aggregation. Then the rejected write and
+    // one routed write per value type. A take-job to test for rejects, a
+    // router-side histogram or an exchange under the count would each
+    // raise the count.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution, StreamExecution}
+    import spark.implicits._
+    // (properties, SQL execution and RDD scope for the failure message)
+    final class JobLog extends SparkListener {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+        (java.util.Properties, String)]
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties).getOrElse(new java.util.Properties)
+        jobs.add((p, s"execution ${p.getProperty("spark.sql.execution.id")}" +
+          s" scope ${p.getProperty("spark.rdd.scope")}")); ()
+      }
+    }
+    val log = new JobLog
+    // listener events arrive asynchronously, in order: once a marked job
+    // is seen, every job before it has been seen too
+    def drained(): Unit = {
+      val mark = java.util.UUID.randomUUID().toString
+      val ctx = spark.sparkContext
+      ctx.setLocalProperty("graft.spec.mark", mark)
+      try ctx.parallelize(Seq(1), 1).count()
+      finally ctx.setLocalProperty("graft.spec.mark", null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!log.jobs.asScala.exists(_._1.getProperty("graft.spec.mark") ==
+          mark) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(10)
+    }
+    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val src = MemoryStream[(String, String)]
+    val wh = Files.createTempDirectory("wh").toString
+    val q = IngestPipeline.start(src.toDF().toDF("topic", "payload"),
+      new TableRouter(new SchemaRegistry, TableCatalog.default(spark, wh)),
+      Files.createTempDirectory("ckpt").toString,
+      rejectedDir = Some(Files.createTempDirectory("rej").toString))
+    // ten numeric tables, one string table and one rejected row per batch
+    def round(k: Int) = (0 until 10).map(i =>
+        (s"/c/d/out/sensors/n$i", s"""{"value":$k.5}""")) ++
+      Seq(("/c/d/out/sensors/label", s"""{"value":"v$k"}"""),
+        ("bad-topic", """{"value":1}"""))
+    spark.sparkContext.addSparkListener(log)
+    try {
+      src.addData(round(0): _*)
+      q.processAllAvailable()
+      src.addData(round(1): _*)
+      q.processAllAvailable()
+      drained()
+      val steady = log.jobs.asScala.toSeq.collect {
+        case (p, site) if p.getProperty(StreamExecution.QUERY_ID_KEY) ==
+            q.id.toString &&
+          p.getProperty(MicroBatchExecution.BATCH_ID_KEY) == "1" => site
+      }
+      assert(steady.size == 6, steady.mkString("; "))
+      assert(TableCatalog.default(spark, wh).read("n3").count() == 2)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      q.stop()
+    }
   }
 
   test("each micro-batch commits one part file per table") {
