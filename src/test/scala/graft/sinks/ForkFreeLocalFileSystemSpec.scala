@@ -137,4 +137,16 @@ class ForkFreeLocalFileSystemSpec extends AnyFunSuite {
       assert(spark.read.parquet(rej).count() == 1)
     } finally q.stop()
   }
+
+  test("WarehouseCatalog.append and compact use it") {
+    import spark.implicits._
+    val wh = new WarehouseCatalog(spark,
+      Files.createTempDirectory("wh").toString)
+    val rows = Seq(("c", "d", 1.5), ("c", "d", 2.5))
+      .toDF("client", "device", "value")
+    assert(bytesViaForkFree(wh.append("t", rows)) > 0,
+      "WarehouseCatalog.append")
+    assert(bytesViaForkFree(wh.compact("t")) > 0, "WarehouseCatalog.compact")
+    assert(wh.read("t").count() == 2)
+  }
 }

@@ -109,6 +109,35 @@ class TableRouterSpec extends AnyFunSuite {
     assert(catalog.read("a").count() == 2 && catalog.read("b").count() == 1)
   }
 
+  test("an interrupted wait still outlasts every append, then re-raises") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors}
+    val pool = Executors.newCachedThreadPool()
+    val release = new CountDownLatch(1)
+    @volatile var appendEnded = false
+    // (what the wait threw, append ended by then, interrupt flag set)
+    @volatile var seen: Option[(Throwable, Boolean, Boolean)] = None
+    def task(body: => Unit) = pool.submit(new Callable[Unit] {
+      def call(): Unit = body })
+    try {
+      val failed = task(throw new IllegalStateException("append failed"))
+      val slow = task { release.await(); appendEnded = true }
+      val waiter = new Thread(() =>
+        try { TableRouter.awaitAll(Seq(failed, slow)); () }
+        catch { case e: Throwable =>
+          seen = Some((e, appendEnded, Thread.currentThread().isInterrupted))
+        })
+      waiter.start()
+      waiter.interrupt()
+      waiter.join(300)
+      assert(waiter.isAlive, "returned while an append was still running")
+      release.countDown()
+      waiter.join(10000)
+      assert(!waiter.isAlive)
+      assert(seen.exists { case (e, ended, flag) =>
+        e.isInstanceOf[InterruptedException] && ended && flag }, seen)
+    } finally { release.countDown(); pool.shutdownNow(); () }
+  }
+
   test("schema-mismatch rows reach the configured reject sink") {
     val root = Files.createTempDirectory("graft-wh").toString
     val catalog = new WarehouseCatalog(spark, root)
